@@ -105,8 +105,8 @@ object Canonicalize {
     //    set is stable), so detection fires at most one round later
     //    than the old set-based test.
     // Per round: sym exchange + oriented exchange = 2 exchanges;
-    // CcProbe measured the old join form at ~6 AQE stage-jobs per round
-    // on sf0.1 (66 jobs / 211 stages for 11 rounds).
+    // the old join form measured ~6 AQE stage-jobs per round on sf0.1
+    // (66 jobs / 211 stages for 11 rounds).
     // The whole-partition window state is the node's neighbor list —
     // spillable (UnsafeExternalSorter), unlike a collect_list array, so
     // a mega-hub degrades to disk instead of OOM.
@@ -156,12 +156,6 @@ object Canonicalize {
         .where($"src" =!= $"dst")
     }
 
-    // canonical-pair content digest + count: cheap fixpoint detection
-    def sig(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)),
-        expr("bit_xor(xxhash64(least(src, dst), greatest(src, dst)))")).first()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-    }
     // LAZY localCheckpoint: the sig() aggregation is the action that
     // materializes each checkpoint, so a convergence round costs ONE
     // Spark job, not two (eager checkpoint + agg). One large/small
@@ -197,6 +191,21 @@ object Canonicalize {
     nodes.join(cur.select($"src".as("node"), $"dst".as("comp")).distinct(),
         Seq("node"), "left")
       .select($"node", coalesce($"comp", $"node").as("comp"))
+  }
+
+  /** Fixpoint signature of an undirected edge multiset: (count, wrapping
+    * sum, xor) of the canonical-pair hash in ONE aggregate. The sum sees
+    * the even multiplicities xor cancels, so a false convergence needs a
+    * real 64-bit hash collision.
+    */
+  private[kg] def sig(df: DataFrame): (Long, Long, Long) = {
+    val h = xxhash64(least(col("src"), col("dst")), greatest(col("src"), col("dst")))
+    // the wrapping sum as two 32-bit half sums: neither can overflow
+    // below 2^31 rows, so it does not depend on spark.sql.ansi.enabled
+    val r = df.agg(count(lit(1)), sum(shiftrightunsigned(h, 32)),
+      sum(h.bitwiseAND(lit(0xFFFFFFFFL))), bit_xor(h)).first()
+    def orZero(i: Int) = if (r.isNullAt(i)) 0L else r.getLong(i)
+    (r.getLong(0), (orZero(1) << 32) + orZero(2), orZero(3))
   }
 
   /** Min-label propagation CC (O(diameter) rounds) — kept as the simple

@@ -11,6 +11,10 @@ import org.apache.spark.sql.functions._
   *     → distinct triples → salted repartition → partitioned write
   *     → per-bucket lineage manifest
   *
+  * `run` is the only writer of the triple table: parquet partitioned by
+  * (bucket, pred), dynamic partition overwrite set on the writer (never
+  * on the caller's session), lineage from one readback of the buckets.
+  *
   * Scale posture: the only shuffles are (1) triple dedup, (2) the salted
   * repartition feeding the partitioned write, (3) the tiny dictionary-side
   * CC loop. The 100KB `content` column never crosses a shuffle — it dies
@@ -41,10 +45,6 @@ object KgPipeline {
           cfg: KgConfig, onlyBuckets: Option[Set[Int]] = None): KgResult = {
     import spark.implicits._
     val t0 = System.currentTimeMillis()
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
 
     val hashed = TableIO.withInvariants(corpus, cfg.nBuckets)
 
@@ -75,20 +75,21 @@ object KgPipeline {
     val out = triples.repartition(
       col("bucket"), col("pred"),
       pmod(xxhash64(col("fileSha")), lit(cfg.writeSalt)))
-    out.write.mode("overwrite").partitionBy("bucket", "pred")
-      .parquet(cfg.triplesDir)
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket", "pred").parquet(cfg.triplesDir)
 
-    // lineage from what actually landed on disk (SURVEY A7/S5)
+    // lineage from what actually landed on disk (SURVEY A7/S5): one
+    // readback, at most nBuckets rows; a todo bucket that received no
+    // triples still commits, with (rowCount, contentDigest) = (0, 0)
     val written = spark.read.parquet(cfg.triplesDir)
       .filter(col("bucket").isin(todoBuckets.toSeq: _*))
-    val stats = Manifest.bucketStats(written)
-    val allTodoDf = todoBuckets.toSeq.sorted.toDF("bucket")
-    val fullStats = allTodoDf.join(stats, Seq("bucket"), "left")
-      .na.fill(0L, Seq("rowCount", "contentDigest"))
-    val nWritten = fullStats.agg(sum("rowCount")).first().getLong(0)
+    val landed = Manifest.bucketStats(written).as[(Int, Long, Long)].collect()
+    val stats = todoBuckets.toSeq.sorted
+      .map(b => landed.find(_._1 == b).getOrElse((b, 0L, 0L)))
+    val nWritten = stats.map(_._2).sum
     Manifest.write(spark, cfg.manifestDir, cfg.runId, "triples",
-      fullStats, attempt = 1, startedAtMs = t0,
-      wallMs = System.currentTimeMillis() - t0)
+      stats.toDF("bucket", "rowCount", "contentDigest"), attempt = 1,
+      startedAtMs = t0, wallMs = System.currentTimeMillis() - t0)
     KgResult(nWritten, doneSet.size + todoBuckets.size,
       System.currentTimeMillis() - t0)
   }

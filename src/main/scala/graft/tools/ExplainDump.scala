@@ -1,20 +1,62 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
 import org.apache.spark.sql.functions._
 import graft.kg._
 
 /** Writes docs/PLANS.md: `explain(formatted)` for the load-bearing plans,
-  * so plan-shape regressions are reviewable in diffs. Run:
+  * so plan-shape regressions are reviewable in diffs. With arguments it
+  * instead dumps each named SparkEntry key's plan to
+  * `plans/r07/<key>_<suffix>.txt` — the optimization evidence trail
+  * (before/after plan shapes). For iterative keys (CC, k-core, converged
+  * PageRank) building the DataFrame runs the loop, so the captured plan
+  * is the final round's shape. Run:
   *   sbt 'runMain graft.tools.ExplainDump'
+  *   sbt 'runMain graft.tools.ExplainDump <suffix> <sfDir> <key> [<key> ...]'
   */
 object ExplainDump {
-  def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+  private val KeyPlansDir = "plans/r07"
+
+  /** `explain(formatted)`, capped at `max` chars. */
+  private def formatted(df: DataFrame, max: Int): String = {
+    val s = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+    if (s.length <= max) s else s.take(max) + s"\n... [truncated ${s.length - max} chars]\n"
+  }
+
+  def main(args: Array[String]): Unit = args.toSeq match {
+    case Seq() => dumpDoc(session(4))
+    case Seq(suffix, sfDir, keys @ _*) if keys.nonEmpty =>
+      dumpKeys(session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt), suffix, sfDir, keys)
+    case _ => sys.error("usage: ExplainDump [<suffix> <sfDir> <key>...]")
+  }
+
+  private def session(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  private def dumpKeys(spark: SparkSession, suffix: String, sfDir: String,
+                       keys: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(KeyPlansDir))
+    for (k <- keys) {
+      val out = s"$KeyPlansDir/${k}_$suffix.txt"
+      Files.writeString(Paths.get(out), s"# $k ($suffix) — sfDir=$sfDir, explain(formatted)\n" +
+        formatted(graft.SparkEntry.queries(k)(spark, sfDir), 60000))
+      println(s"[explain] wrote $out")
+    }
+    spark.stop()
+  }
+
+  private def dumpDoc(spark: SparkSession): Unit = {
     import spark.implicits._
 
     val sb = new StringBuilder
@@ -24,14 +66,11 @@ object ExplainDump {
     sb.append("`Exchange`, small dims broadcast, hot operators sit inside\n")
     sb.append("`WholeStageCodegen` spans.\n")
 
-    def dump(title: String, note: String, df: org.apache.spark.sql.DataFrame): Unit = {
+    def dump(title: String, note: String, df: DataFrame): Unit = {
       sb.append(s"\n## $title\n\n$note\n\n```\n")
       // large literals (e.g. a bloom-filter binary) render as hex blobs —
       // cap each plan at 20k chars to keep the doc reviewable
-      val s = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-      sb.append(if (s.length <= 20000) s
-        else s.take(20000) + s"\n... [truncated ${s.length - 20000} chars]\n")
+      sb.append(formatted(df, 20000))
       sb.append("```\n")
     }
 

@@ -121,4 +121,55 @@ class PipelineE2ESpec extends SparkTestBase {
     val res3 = runPipeline(CorpusGen.TinyFiles, resumed)
     assert(res3.triplesWritten == 0L)
   }
+
+  /** Every file under the given bucket partitions: relative path → bytes. */
+  private def bucketFiles(triplesDir: String, buckets: Range): Map[String, Seq[Byte]] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get(triplesDir)
+    buckets.map(b => root.resolve(s"bucket=$b")).filter(Files.isDirectory(_)).flatMap { d =>
+      val walk = Files.walk(d)
+      try walk.iterator().asScala.filter(Files.isRegularFile(_)).toList
+      finally walk.close()
+    }.map(f => root.relativize(f).toString -> Files.readAllBytes(f).toSeq).toMap
+  }
+
+  test("run leaves the session conf unchanged; a resume rewrites only its buckets") {
+    // a fresh session: the shared one may already hold confs from other suites
+    val s = spark.newSession()
+    import s.implicits._
+    val dir = tmp("kg-conf")
+    val cfg = KgConfig(s"$dir/triples", s"$dir/manifest", runId = "r1")
+    val corpus = CorpusGen.corpus(CorpusGen.TinyFiles).toDF()
+    val before = s.conf.getAll
+    KgPipeline.run(s, corpus, KgPipeline.dictDataset(s), cfg, Some((0 until 8).toSet))
+    val committed = bucketFiles(cfg.triplesDir, 0 until 8)
+    assert(committed.nonEmpty)
+    val res = KgPipeline.run(s, corpus, KgPipeline.dictDataset(s), cfg)
+    assert(s.conf.getAll == before)
+    assert(res.bucketsCommitted == 16 && res.triplesWritten > 0)
+    // the resume overwrote only buckets 8..15: committed ones are
+    // byte-identical, the resumed ones landed
+    assert(bucketFiles(cfg.triplesDir, 0 until 8) == committed)
+    assert(bucketFiles(cfg.triplesDir, 8 until 16).nonEmpty)
+  }
+
+  test("lineage: a todo bucket with no triples commits one (0, 0) manifest row") {
+    val dir = tmp("kg-fill")
+    val cfg = KgConfig(s"$dir/triples", s"$dir/manifest", runId = "r1", nBuckets = 16)
+    val res = KgPipeline.run(spark, corpusDf(3), KgPipeline.dictDataset(spark), cfg)
+    val rows = spark.read.parquet(cfg.manifestDir)
+      .select("bucket", "rowCount", "contentDigest", "status").collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getString(3)))
+    // exactly one committed row per bucket
+    assert(rows.map(_._1).sorted.toSeq == (0 until 16))
+    assert(rows.forall(_._4 == "committed"))
+    val landed = spark.read.parquet(cfg.triplesDir).select("bucket").distinct()
+      .collect().map(_.getInt(0)).toSet
+    assert(landed.nonEmpty && landed.size <= 3, s"3 files fill at most 3 buckets: $landed")
+    val (full, empty) = rows.partition(r => landed(r._1))
+    assert(empty.length == 16 - landed.size)
+    empty.foreach(r => assert(r._2 == 0L && r._3 == 0L, s"bucket ${r._1}: $r"))
+    full.foreach(r => assert(r._2 > 0L, s"bucket ${r._1}: $r"))
+    assert(res.triplesWritten == rows.map(_._2).sum)
+  }
 }

@@ -100,11 +100,14 @@ class PlanSpec extends SparkTestBase {
 
   test("pred-partitioned triple sink: read-back prunes partitions") {
     import org.apache.spark.sql.execution.FileSourceScanExec
+    import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft_trip_prune").toString
-    val io = new graft.kg.LocalParquetIO("/nonexistent", s"$dir/triples")
-    val triples = SparkEntry.entry(spark)
-      .withColumn("bucket", pmod(xxhash64(col("fileSha")), lit(4)).cast("int"))
-    io.writeTriples(triples, org.apache.spark.sql.SaveMode.Overwrite)
+    // the triple table exactly as the pipeline lays it out
+    val cfg = graft.kg.KgConfig(s"$dir/triples", s"$dir/manifest", "r1", nBuckets = 4)
+    graft.kg.KgPipeline.run(spark,
+      graft.fixtures.CorpusGen.corpus(graft.fixtures.CorpusGen.TinyFiles).toDF(),
+      graft.kg.KgPipeline.dictDataset(spark), cfg)
+    val io = new graft.kg.LocalParquetIO("/nonexistent", cfg.triplesDir)
     val preds = io.readTriples(spark).select("pred").distinct().count()
     assert(preds >= 3, s"fixture too small: $preds preds")
     val rb = io.readTriples(spark).filter(col("pred") === "imports")

@@ -1,5 +1,6 @@
 package graft.kg
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.Hashing
@@ -300,36 +301,39 @@ object Canonicalize {
   }
 
   /** Collect the (small, broadcast-scale) link map and broadcast it for
-    * flatMap-side canonicalization (Extract.canonicalTriples).
+    * the triple emitter's map-side lookup (`toTriples`).
     */
-  def broadcastLinkMap(spark: SparkSession,
-                       dict: Dataset[DictEntry]): org.apache.spark.broadcast.Broadcast[Map[String, String]] =
-    spark.sparkContext.broadcast(
-      linkMap(dict).collect().map(l => l.norm -> l.canonical).toMap)
+  def broadcastLinkMap(spark: SparkSession, dict: Dataset[DictEntry]): Broadcast[Map[String, String]] =
+    broadcastLinks(linkMap(dict))
 
-  /** Canonicalize scored relations into final triples via two broadcast
-    * joins (SURVEY J1): subj and obj norms → cluster canonical; symbols
-    * outside the dictionary pass through unchanged.
+  private def broadcastLinks(links: Dataset[CanonicalLink]): Broadcast[Map[String, String]] =
+    links.sparkSession.sparkContext.broadcast(
+      links.collect().map(l => l.norm -> l.canonical).toMap)
+
+  /** Stage 4, the one triple emitter (SPEC.md §4–§5): subj and obj norms →
+    * cluster canonical by a map-side lookup in the broadcast link map
+    * (symbols outside the dictionary pass through unchanged), then one
+    * aggregate on the identity key. Its partial `HashAggregate` collapses
+    * duplicates map-side, so the exchange carries each partition's
+    * distinct triples only. max, not dropDuplicates: one triple may be
+    * reached at different scores (the same call at different distances).
     */
-  def toTriples(rels: Dataset[ScoredRelation], links: Dataset[CanonicalLink]): Dataset[Triple] = {
+  def toTriples(rels: Dataset[ScoredRelation], canon: Broadcast[Map[String, String]]): Dataset[Triple] = {
     val spark = rels.sparkSession
     import spark.implicits._
-    val l = links.toDF()
-    rels.toDF()
-      .join(broadcast(l.select($"norm".as("subjNorm"), $"canonical".as("subjCanon"))),
-        Seq("subjNorm"), "left")
-      .join(broadcast(l.select($"norm".as("objNorm"), $"canonical".as("objCanon"))),
-        Seq("objNorm"), "left")
-      .select(
-        coalesce($"subjCanon", $"subjNorm").as("subj"),
-        $"pred",
-        coalesce($"objCanon", $"objNorm").as("obj"),
-        $"repo", $"path", $"commit",
-        $"fileSha", $"score")
-      // max, not dropDuplicates: duplicate triples may carry different
-      // scores (same call at different distances) — keep it deterministic
-      .groupBy("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
+    rels.mapPartitions { it =>
+      val c = canon.value
+      it.map(r => Triple(c.getOrElse(r.subjNorm, r.subjNorm), r.pred,
+        c.getOrElse(r.objNorm, r.objNorm), r.repo, r.path, r.commit, r.fileSha, r.score))
+    }.groupBy(Triple.IdCols.map(col): _*)
       .agg(max($"score").as("score"))
       .as[Triple]
   }
+
+  /** `toTriples` with a link table, the form `SparkEntry.entry` calls:
+    * collects it (broadcast-scale by contract, BASELINE.json:6) and
+    * delegates.
+    */
+  def toTriples(rels: Dataset[ScoredRelation], links: Dataset[CanonicalLink]): Dataset[Triple] =
+    toTriples(rels, broadcastLinks(links))
 }

@@ -11,7 +11,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * dictionary broadcast to executors (BASELINE.json:6
   * "mapPartitions-backed broadcast dictionaries"). Pair-gen is fused into
   * the per-file scan — mentions of one file are born colocated, so there
-  * is ZERO shuffle until entity linking (SURVEY §4.4(2)).
+  * is ZERO shuffle until the triple dedup (SURVEY §4.4(2)).
   *
   * The per-stage functions (`scanFile`, `pairs`, `classify`) are pure and
   * unit-testable; the fused `relations` composes them per row.
@@ -105,9 +105,11 @@ object Extract {
     if (p.subjKind == "class") 1.0
     else 1.0 / (1.0 + math.exp(-(4.0 - 0.1 * p.lineDist)))
 
-  /** Stages 1–3 fused for one file → deduplicated scored relations
-    * (local Set dedup — the triple key includes fileSha, so per-file
-    * dedup is globally complete with NO shuffle, SURVEY §4.4(2)).
+  /** Stages 1–3 fused for one file → its distinct scored relations
+    * (local Set dedup on norms and score). Not the triple dedup: two
+    * aliases of one entity, one triple reached at two scores, or an
+    * exact-duplicate corpus row still repeat a triple identity, which the
+    * emitter's aggregate (`Canonicalize.toTriples`) collapses.
     */
   def relations(f: HashedFile, fnAliases: Set[String]): Vector[ScoredRelation] = {
     val ms = scanFile(f, fnAliases)
@@ -154,34 +156,16 @@ object Extract {
     }
   }
 
-  /** Stages 1–4 fused: corpus → CANONICAL triples in one narrow flatMap.
-    * The norm→canonical link map is broadcast alongside the function
-    * dictionary (BASELINE.json:6 "mapPartitions-backed broadcast
-    * dictionaries"), so canonicalization costs zero extra stages — the
-    * only shuffle left downstream is the global triple dedup. Semantics
-    * identical to Canonicalize.toTriples ∘ scoredRelations (e2e-gated).
+  /** Stages 1–4: corpus → canonical triples, `Canonicalize.toTriples` over
+    * `scoredRelations` — the composition every caller runs, so it equals
+    * the emitter by construction. Both dictionaries are broadcast
+    * (BASELINE.json:6 "mapPartitions-backed broadcast dictionaries"); the
+    * triple dedup is the only shuffle.
     */
   def canonicalTriples(ds: Dataset[HashedFile],
                        fnAliases: Broadcast[Set[String]],
-                       canon: Broadcast[Map[String, String]]): Dataset[Triple] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.mapPartitions { it =>
-      val dict = fnAliases.value
-      val c = canon.value
-      it.flatMap { f =>
-        relations(f, dict).map { r =>
-          Triple(c.getOrElse(r.subjNorm, r.subjNorm), r.pred,
-            c.getOrElse(r.objNorm, r.objNorm),
-            r.repo, r.path, r.commit, r.fileSha, r.score)
-        }.distinct
-      }
-    }.groupBy("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
-      // max, not dropDuplicates: duplicate triples may carry different
-      // scores (same call at different distances) — keep it deterministic
-      .agg(org.apache.spark.sql.functions.max("score").as("score"))
-      .as[Triple]
-  }
+                       canon: Broadcast[Map[String, String]]): Dataset[Triple] =
+    Canonicalize.toTriples(scoredRelations(ds, fnAliases), canon)
 
   /** Broadcast the function-alias set (SURVEY S3). */
   def broadcastFnAliases(spark: SparkSession, dict: Dataset[DictEntry]): Broadcast[Set[String]] = {

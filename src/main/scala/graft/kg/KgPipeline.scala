@@ -7,8 +7,9 @@ import org.apache.spark.sql.functions._
   *
   *   corpus → sha256 invariant → [resume anti-join vs manifest]
   *     → fused mention-scan + pair-gen + classify (narrow, broadcast dict)
-  *     → canonicalize (LSH + connected components + broadcast link joins)
-  *     → distinct triples → salted repartition → partitioned write
+  *     → link map (LSH + connected components, broadcast)
+  *     → canonical triples (map-side link lookup + one max-score dedup)
+  *     → salted repartition → partitioned write
   *     → per-bucket lineage manifest
   *
   * `run` is the only writer of the triple table: parquet partitioned by
@@ -61,8 +62,8 @@ object KgPipeline {
       .select("repo", "path", "commit", "lang", "content", "file_sha")
       .as[HashedFile]
 
-    // stages 1–4 fused per file: mention scan + pair-gen + classify +
-    // broadcast-map canonicalization in ONE narrow flatMap; the global
+    // stages 1–4 in ONE narrow stage: mention scan + pair-gen + classify
+    // per file, then the broadcast-map canonicalization; the global
     // triple dedup is the only corpus-proportional shuffle before write
     val fnAliases = Extract.broadcastFnAliases(spark, dict)
     val canonB = Canonicalize.broadcastLinkMap(spark, dict)

@@ -107,6 +107,14 @@ case class Triple(
     fileSha: String,
     score: Double)
 
+object Triple {
+
+  /** A triple's identity: every column but `score`. The emitter dedups on
+    * it, lineage digests hash it (this column order), combiners vote on it.
+    */
+  val IdCols: Seq[String] = Seq("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
+}
+
 /** Per-partition lineage manifest row (BASELINE.json:6 "per-partition
   * lineage and checkpointed resumability"). contentDigest is a
   * commutative xor-fold of xxhash64(file_sha) — invariant under

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.types._
 import graft.kg._
 
 /** Structured Streaming stretch (SURVEY §2.9 — post-parity optional):
@@ -88,6 +89,15 @@ object IncrementalIngest {
     q.awaitTermination()
   }
 
+  /** The `events` table's columns, as both event streams read them. */
+  private val eventsSchema = StructType(Seq(
+    StructField("event_id", LongType),
+    StructField("ts", TimestampType),
+    StructField("user_id", LongType),
+    StructField("event_type", StringType),
+    StructField("value", DoubleType),
+    StructField("props", StringType)))
+
   /** Streaming SESSIONIZATION (round 6): the streaming-native
     * counterpart of the batch `sessionize` key, via Spark's built-in
     * `session_window` — gap-merged per-user sessions maintained in the
@@ -103,14 +113,7 @@ object IncrementalIngest {
     */
   def sessionWindows(spark: SparkSession, eventsDir: String, outDir: String,
                      checkpointDir: String, gap: String = "30 minutes"): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("props", org.apache.spark.sql.types.StringType)))
-    val q = spark.readStream.schema(schema).parquet(eventsDir)
+    val q = spark.readStream.schema(eventsSchema).parquet(eventsDir)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), gap))
       .agg(count(lit(1)).as("n_events"),
@@ -136,14 +139,7 @@ object IncrementalIngest {
     */
   def windowedEventCounts(spark: SparkSession, eventsDir: String,
                           outDir: String, checkpointDir: String): Unit = {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("event_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts", org.apache.spark.sql.types.TimestampType),
-      org.apache.spark.sql.types.StructField("user_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("props", org.apache.spark.sql.types.StringType)))
-    val q = spark.readStream.schema(schema).parquet(eventsDir)
+    val q = spark.readStream.schema(eventsSchema).parquet(eventsDir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"))

@@ -84,9 +84,9 @@ object ExplainDump {
       Extract.broadcastFnAliases(spark, dict),
       Canonicalize.broadcastLinkMap(spark, dict))
     dump("KG pipeline: corpus → canonical triples",
-      "One narrow MapPartitions (scan+pair+classify+canonicalize fused; " +
-        "content dies here), then a single two-phase HashAggregate for the " +
-        "triple dedup — the only corpus-proportional shuffle.",
+      "Narrow MapPartitions only (scan+pair+classify, then the map-side " +
+        "link-map lookup; content dies in the first), then a single two-phase " +
+        "HashAggregate for the triple dedup — the only corpus-proportional shuffle.",
       triples.toDF())
 
     val sfDir = "/root/testdata/sf0.001"
@@ -103,7 +103,7 @@ object ExplainDump {
     dump("join_bloom_prune", "Build-side bloom as a SCALAR SUBQUERY (round 3 — no driver-collected binary literal in the plan) probing ahead of the exact broadcast semi-join — the exact shape of Spark's own injected runtime bloom filter.", q("join_bloom_prune"))
     dump("dedup_embed_cosine", "Round 3: self-join EQUI-KEY is the deterministic IVF cluster id (broadcast 8-centroid assignment + row_number argmax) — sub-quadratic; exact cosine verify inside the join.", q("dedup_embed_cosine"))
     dump("sink_partition_prune", "Read-back of a partitionBy(lang) sink with a partition-column filter: PartitionFilters prune the scan to the single lang=en directory before IO.", q("sink_partition_prune"))
-    dump("kg_triples_counts", "Round 4: the full oracled DAG — one narrow MapPartitions (scan+pair+classify fused, content dies inside), two BroadcastHashJoins for the canonical link map, then the two-phase triple-dedup HashAggregate and the count aggregate; the only corpus-proportional shuffle is the dedup.", q("kg_triples_counts"))
+    dump("kg_triples_counts", "Round 4: the full oracled DAG — the same emitter as the KG pipeline: narrow MapPartitions (scan+pair+classify fused, content dies inside; canonicalization is a map-side lookup in the broadcast link map), then the two-phase triple-dedup HashAggregate and the count aggregate; the only corpus-proportional shuffle is the dedup.", q("kg_triples_counts"))
     dump("sample_stratified", "Round 5: stratified sampling is a pure per-row predicate (stratum CASE → hex threshold) — the whole plan is one scan with the filter applied in a single WholeStageCodegen span, no Exchange.", q("sample_stratified"))
     dump("decontam_ngram", "Round 5: 3-gram decontamination — eval-slice grams distinct then BROADCAST into the semi-match; the training side is a narrow scan+explode; the per-doc countDistinct is the only data-proportional shuffle (partial_count map-side).", q("decontam_ngram"))
     dump("text_repetition", "Round 6: repetition gate is a typed per-partition HashMap count — O(len) per row (the round-5 nested-HOF form was O(distinct×len) per row, a straggler hazard on high-vocabulary docs), still scan→mapPartitions only, zero Exchange at any corpus size.", q("text_repetition"))

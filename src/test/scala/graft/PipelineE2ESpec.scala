@@ -21,7 +21,7 @@ class PipelineE2ESpec extends SparkTestBase {
     CorpusGen.corpus(n).toDF()
   }
 
-  private def tripleKey = Seq("subj", "pred", "obj", "repo", "path", "commit", "fileSha")
+  private def tripleKey = Triple.IdCols
 
   private def runPipeline(n: Int, dir: String,
                           onlyBuckets: Option[Set[Int]] = None): KgResult = {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.exchange.{Exchange, BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.execution.{SparkPlan, QueryExecution}
 
 /** Physical-plan discipline tests (SURVEY §4.4, §7.4(4)): the 100KB
@@ -26,14 +27,16 @@ class PlanSpec extends SparkTestBase {
     val hashed = corpus.withColumn("file_sha", sha2(col("content"), 256))
       .select("repo", "path", "commit", "lang", "content", "file_sha")
       .as[graft.kg.HashedFile]
-    val rels = graft.kg.Extract.scoredRelations(hashed,
-      graft.kg.Extract.broadcastFnAliases(spark, dict))
-    val triples = graft.kg.Canonicalize.toTriples(rels,
-      graft.kg.Canonicalize.linkMap(dict))
+    // the path KgPipeline.run runs
+    val triples = graft.kg.Extract.canonicalTriples(hashed,
+      graft.kg.Extract.broadcastFnAliases(spark, dict),
+      graft.kg.Canonicalize.broadcastLinkMap(spark, dict))
     triples.count() // finalize AQE plan
-    val shuffles = allNodes(executed(triples.toDF()))
-      .collect { case e: ShuffleExchangeLike => e }
-    assert(shuffles.nonEmpty, "expected at least the dedup shuffle")
+    val nodes = allNodes(executed(triples.toDF()))
+    val shuffles = nodes.collect { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size == 1, s"expected exactly the dedup shuffle, got ${shuffles.size}")
+    assert(!nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      "canonicalization must be a map-side lookup, not a broadcast join")
     shuffles.foreach { ex =>
       val cols = ex.child.output.map(_.name.toLowerCase)
       assert(!cols.contains("content"),
